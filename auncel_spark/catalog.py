@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -393,6 +394,8 @@ def q_bounded_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tails. GT is collected ONCE and both criteria evaluate against it
     # in numpy — r09's plan recomputed the full GT scan for each of the
     # two threshold_recall actions (the heaviest stage, twice).
+    # Pool threads run through inheritable_thread_target so their jobs
+    # stay in the caller's job group (job groups are thread-local).
     from concurrent.futures import ThreadPoolExecutor
 
     def _gt_pdf():
@@ -418,9 +421,9 @@ def q_bounded_bound_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_gt, f_f, f_m = (
-            pool.submit(_gt_pdf),
-            pool.submit(_search_fixed),
-            pool.submit(_search_mixed),
+            pool.submit(inheritable_thread_target(spark)(_gt_pdf)),
+            pool.submit(inheritable_thread_target(spark)(_search_fixed)),
+            pool.submit(inheritable_thread_target(spark)(_search_mixed)),
         )
         gt, res_f, res_m = f_gt.result(), f_f.result(), f_m.result()
 
@@ -1354,7 +1357,8 @@ def _overlap_contract_jobs(spark, q, search_fn, sf_dir):
     """Shared shape of the assertion-row ANN contracts (laet/hnsw):
     the method's search, the exact-GT scan, and the query count are
     independent Spark jobs — run them from a driver thread pool so each
-    job's stage tail back-fills the executors (guide §2.6). Returns
+    job's stage tail back-fills the executors (guide §2.6), in the
+    caller's job group (inheritable_thread_target). Returns
     (n_queries, result_pdf(qid, dist), gt_pdf(qid, pos, dist))."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1366,9 +1370,11 @@ def _overlap_contract_jobs(spark, q, search_fn, sf_dir):
         )
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_res = pool.submit(lambda: search_fn().select("qid", "dist").toPandas())
-        f_gt = pool.submit(_gt_pdf)
-        f_n = pool.submit(q.count)
+        f_res = pool.submit(inheritable_thread_target(spark)(
+            lambda: search_fn().select("qid", "dist").toPandas()
+        ))
+        f_gt = pool.submit(inheritable_thread_target(spark)(_gt_pdf))
+        f_n = pool.submit(inheritable_thread_target(spark)(q.count))
         return f_n.result(), f_res.result(), f_gt.result()
 
 
@@ -3516,16 +3522,16 @@ def q_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _emb_queries(spark, sf_dir)
     idx = _seed_ivf(spark, sf_dir)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_both = pool.submit(
+        f_both = pool.submit(inheritable_thread_target(spark)(
             lambda: knn_exact_multi(
                 q, _emb_base(spark, sf_dir), K, [Metric.L2, Metric.IP]
             )
             .select("metric", "qid", "id")
             .toPandas()
-        )
-        f_res = pool.submit(
+        ))
+        f_res = pool.submit(inheritable_thread_target(spark)(
             lambda: idx.search(q, K, nprobe=NPROBE).select("qid", "id").toPandas()
-        )
+        ))
         both, res = f_both.result(), f_res.result()
 
     gt_ids = both[both["metric"] == "l2"].groupby("qid")["id"].agg(set)

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from typing import Iterator
 
 import numpy as np
@@ -60,7 +61,6 @@ def preload_paths(roots: list[str], threads: int = 8) -> dict:
     The reference's analogue is the OnDiskInvertedLists prefetch worker
     pool (``Auncel/OnDiskInvertedLists.h:51-110``); on a multi-executor
     cluster this runs per node over node-local files."""
-    import threading
     import time as _time
 
     files: list[str] = []
@@ -161,6 +161,10 @@ class IVFIndex:
         self._replica_sq = None  # ScalarQuantizer when lists_sq8 exists
         self._use_replica = False
         self._blob = None  # RefineBlob handle (lazy)
+        # (DataFrame, codec) of the active persisted layout, filled once
+        # under the lock and cleared by the layout-changing methods
+        self._source = None
+        self._source_lock = threading.Lock()
 
     @property
     def interdis(self) -> np.ndarray:
@@ -285,15 +289,19 @@ class IVFIndex:
         after the replica swap the exact view is reassembled from the
         coded lists' (id, list_no) + positioned reads into the refine
         blob — correct but pread-shaped, so hot paths should use
-        ``scan_source()`` (codes) + ``refine_blob`` instead."""
+        ``scan_source()`` (codes) + ``refine_blob`` instead. Unless codes
+        are opted in beside kept flat lists, it reuses the serving source."""
         if self._data_df is not None:
             return self._data_df
-        flat = os.path.join(self.data_path, "lists")
-        if os.path.isdir(flat):
-            return self.spark.read.parquet(flat)
-        return self._data_from_blob()
+        if self.codec_active:
+            flat = os.path.join(self.data_path, "lists")
+            if os.path.isdir(flat):
+                return self.spark.read.parquet(flat)
+        sdf, codec = self._serving_source()
+        return sdf if codec is None else self._data_from_blob(sdf)
 
-    def _data_from_blob(self) -> DataFrame:
+    def _data_from_blob(self, coded: DataFrame) -> DataFrame:
+        """Exact rows for the coded lists ``coded`` via the refine blob."""
         from typing import Iterator as _It
 
         blob = self.refine_blob
@@ -301,9 +309,7 @@ class IVFIndex:
             raise FileNotFoundError(
                 f"{self.data_path}: no lists/ and no refine sidecar"
             )
-        coded = self.spark.read.parquet(
-            os.path.join(self.data_path, "lists_sq8")
-        ).select("id", "list_no")
+        coded = coded.select("id", "list_no")
         bdir, n, d = blob.dir, blob.n, blob.d
 
         def fetch(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
@@ -340,9 +346,7 @@ class IVFIndex:
     @property
     def codec_active(self) -> bool:
         """True when scans read SQ8 codes (``scan_source`` would return
-        a codec). Cheap flag check for callers that only need the
-        boolean — ``scan_source()`` constructs a fresh DataFrame
-        (driver file-listing + schema read) per call (ADVICE r09)."""
+        a codec) — a flag check, no DataFrame involved."""
         return self._use_replica and self._replica_sq is not None
 
     def scan_source(self):
@@ -351,17 +355,33 @@ class IVFIndex:
         (offset, scale) float64 pair the kernel folds into its batch
         decode (mat = codes·scale + offset — IndexScalarQuantizer's
         Codec8bit, one fused multiply-add per element, against 4x less
-        scan IO and memory traffic than fp32)."""
-        if self._use_replica and self._replica_sq is not None:
+        scan IO and memory traffic than fp32).
+
+        A persisted index lists and reads the schema of its active
+        layout once, and reuses that DataFrame until the layout changes."""
+        if self._data_df is not None:
+            return self._data_df, None
+        return self._serving_source()
+
+    def _serving_source(self):
+        with self._source_lock:
+            if self._source is None:
+                self._source = self._read_layout()
+            return self._source
+
+    def _read_layout(self):
+        coded = os.path.join(self.data_path, "lists_sq8")
+        if self.codec_active:
             sq = self._replica_sq
             levels = 255.0
             scale = np.asarray(sq.vdiff, dtype=np.float64) / levels
             off = np.asarray(sq.vmin, dtype=np.float64) + 0.5 * scale
-            df = self.spark.read.parquet(
-                os.path.join(self.data_path, "lists_sq8")
-            )
-            return df, (off, scale)
-        return self.data, None
+            return self.spark.read.parquet(coded), (off, scale)
+        flat = os.path.join(self.data_path, "lists")
+        if os.path.isdir(flat):
+            return self.spark.read.parquet(flat), None
+        # replica switched off after the swap: exact rows from the blob
+        return self._data_from_blob(self.spark.read.parquet(coded)), None
 
     def build_scan_replica(self) -> dict:
         """Write the SQ8-coded scan replica ``lists_sq8/`` (same
@@ -436,6 +456,7 @@ class IVFIndex:
         with open(os.path.join(self.data_path, "sq_replica.json"), "w") as f:
             json.dump(sq.to_dict(), f)
         self._replica_sq = sq
+        self._source = None
         return {"sec": round(_time.time() - t0, 1), "dir": out_dir}
 
     def build_refine_sidecar(self, delete_source: bool = False) -> dict:
@@ -453,6 +474,7 @@ class IVFIndex:
             delete_source=delete_source,
         )
         self._blob = None
+        self._source = None
         if delete_source:
             import shutil
 
@@ -467,6 +489,7 @@ class IVFIndex:
         if on and self._replica_sq is None:
             raise RuntimeError("no scan replica built (build_scan_replica)")
         self._use_replica = on
+        self._source = None
         self._prefetch_done = False  # scan source changed
         return self
 

@@ -110,9 +110,8 @@ class ErrorProfile:
         config's topk (≤ max_topk), so the extra tail columns feed ONLY
         the refine pool; flat-scan behavior is unchanged
         (state_k == max_topk when no codec is active)."""
-        # cheap flag check — scan_source() builds a fresh DataFrame
-        # (driver file-listing + schema read) per call, and search()
-        # reads this property 4+ times per query batch (ADVICE r09)
+        # flag check: the width depends only on whether the index's
+        # once-resolved scan source is the coded layout
         return self.max_topk + (
             self._REFINE_PAD if self.index.codec_active else 0
         )
@@ -581,11 +580,7 @@ class ErrorProfile:
             # per-query bound is the target rounded UP to the next
             # executed stage (capped at the ladder's last stage) — the
             # scanned list set per query is identical, results bit-equal.
-            if (
-                si >= nbf
-                and not (active & (target == 0)).any()
-                and os.environ.get("SPARK_GRAFT_EXT_COLLAPSE", "1") != "0"
-            ):
+            if si >= nbf and not (active & (target == 0)).any():
                 s_last = 1 << int(np.log2(self.index.nlist))
                 depth = np.minimum(
                     np.exp2(np.ceil(np.log2(np.maximum(target, 1)))).astype(

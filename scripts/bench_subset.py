@@ -1,8 +1,9 @@
 """Focused per-query A/B harness: time named catalog queries in one
 warmed session (median of N), and count the Spark jobs each query
-issues (job-group tracking). The round's primary evidence for
-job-count-reducing optimizations — wall medians on this container are
-noisy, job counts are exact.
+issues (delta of the DAG scheduler's job counter, which counts jobs
+from every driver thread, job group or not). The round's primary
+evidence for job-count-reducing optimizations — wall medians on this
+container are noisy, job counts are exact.
 
 Usage: python scripts/bench_subset.py [-n 5] query [query ...]
 Prints one JSON line: {query: {"median_s": x, "runs": [...], "jobs": J}}
@@ -35,7 +36,7 @@ def main() -> None:
     from auncel_spark.session import get_spark
 
     spark = get_spark("bench_subset")
-    sc = spark.sparkContext
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
 
     # warm the worker pool + parquet footers like bench.py does
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -48,14 +49,12 @@ def main() -> None:
         fn(spark, sf_dir).collect()  # cold pass pays one-time builds
         runs = []
         jobs = None
-        for i in range(n):
-            group = f"{name}_{i}"
-            sc.setJobGroup(group, name)
+        for _ in range(n):
+            j0 = dag.numTotalJobs()
             t0 = time.perf_counter()
             fn(spark, sf_dir).collect()
             runs.append(round(time.perf_counter() - t0, 3))
-            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-            sc.setJobGroup(None, None)
+            jobs = int(dag.numTotalJobs() - j0)
         out[name] = {
             "median_s": sorted(runs)[len(runs) // 2],
             "runs": runs,

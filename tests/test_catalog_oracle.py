@@ -66,3 +66,24 @@ def test_query_matches_oracle(spark, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_pool_jobs_stay_in_caller_job_group(spark):
+    """bounded_knn_bound_check runs its searches and ground-truth scan
+    from a driver thread pool; every job those threads launch must
+    carry the caller's job group (job groups are thread-local), so the
+    group's job ids equal the scheduler's job-counter delta."""
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    fn = entrymod.queries()["bounded_knn_bound_check"]
+    fn(spark, SF_DIR).collect()  # cold pass: one-time profile build
+    group = "pool_job_group_check"
+    j0 = dag.numTotalJobs()
+    sc.setJobGroup(group, group)
+    try:
+        fn(spark, SF_DIR).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    issued = dag.numTotalJobs() - j0
+    assert issued > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == issued

@@ -276,3 +276,114 @@ def test_willneed_density_gate(tmp_path, monkeypatch):
     rows = np.arange(0, 5000, dtype=np.int64)
     rb._willneed_rows(str(path), rows, d=1, gap_rows=256, itemsize=4)
     assert len(calls) == 1 and calls[0][1] == 5000 * 4
+
+
+def _jobs(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+@pytest.mark.parametrize("layout", ["flat", "sq8"])
+def test_scan_source_resolved_once(spark, tmp_path, layout):
+    """A persisted index lists its files and reads its schema once per
+    layout: later scan_source() calls issue no Spark job and return the
+    same DataFrame. 40 lists put the listing above Spark's 32-path
+    parallel-listing threshold, so the first call pays a listing job
+    as well as the schema job."""
+    rng = np.random.default_rng(11)
+    vec = rng.standard_normal((2000, D)).astype(np.float32)
+    df = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(2000, dtype=np.int64), "vec": list(vec)})
+    )
+    idx = IVFIndex.build(df, nlist=40, path=str(tmp_path / "ivf"), centroids=vec[:40])
+    if layout == "sq8":
+        idx.build_scan_replica()
+        idx.build_refine_sidecar(delete_source=True)
+    j0 = _jobs(spark)
+    sdf, codec = idx.scan_source()
+    assert _jobs(spark) > j0
+    assert (codec is not None) == (layout == "sq8")
+    j1 = _jobs(spark)
+    for _ in range(3):
+        again, _ = idx.scan_source()
+        assert again is sdf
+    data = idx.data
+    assert _jobs(spark) == j1
+    if layout == "flat":
+        assert data is sdf
+    assert data.count() == 2000
+
+
+def test_scan_source_follows_layout(spark, tmp_path):
+    """One instance through every layout change: the resolved source
+    always matches the active layout, ``data`` never touches the
+    deleted flat lists, and bounded search returns the rows a freshly
+    loaded index returns."""
+    import threading
+
+    from auncel_spark.profile.error_profile import ErrorProfile
+
+    idx, vec, ids = _mk(spark, tmp_path, n=3000)
+    train, _ = _queries(spark, nq=40, seed=21)
+    ep = ErrorProfile(idx, max_topk=20)
+    ep.fit(train)
+    ep.save(str(tmp_path / "ep"))
+    qdf, _ = _queries(spark, nq=12, seed=33)
+
+    def check(coded: bool):
+        assert (idx.scan_source()[1] is not None) == coded
+        assert idx.codec_active == coded
+        got = idx.data.filter(F.col("id") < 5).orderBy("id").toPandas()
+        np.testing.assert_array_equal(
+            np.array(list(got["vec"]), dtype=np.float32), vec[:5]
+        )
+        fresh = IVFIndex.load(spark, idx.data_path)
+        if fresh._replica_sq is not None:
+            fresh.use_replica(coded)
+        ep2 = ErrorProfile.load(fresh, str(tmp_path / "ep"))
+        a = ep.search(qdf, 10, require_acc=0.9).toPandas()
+        b = ep2.search(qdf, 10, require_acc=0.9).toPandas()
+        cols = ["qid", "pos", "id", "dist"]
+        pd.testing.assert_frame_equal(
+            a[cols].sort_values(["qid", "pos"]).reset_index(drop=True),
+            b[cols].sort_values(["qid", "pos"]).reset_index(drop=True),
+        )
+
+    check(False)
+    idx.build_scan_replica()
+    check(False)
+    idx.use_replica(True)
+    check(True)
+    idx.use_replica(False)
+    check(False)
+    idx.build_refine_sidecar(delete_source=True)
+    assert not os.path.isdir(os.path.join(idx.data_path, "lists"))
+    check(True)
+
+    # threads racing for the first fill (more threads than cores, fast
+    # switching) all get the one source: a double fill would hand out
+    # two different DataFrames
+    import sys
+
+    racer = IVFIndex.load(spark, idx.data_path)
+    n = 8
+    gate = threading.Barrier(n, timeout=60)
+    got = [None] * n
+
+    def first_call(i):
+        gate.wait()
+        got[i] = racer.scan_source()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ts = [threading.Thread(target=first_call, args=(i,)) for i in range(n)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in ts)
+    assert all(g is got[0] for g in got)
+    sdf, codec = got[0]
+    assert codec is not None and sdf.count() == 3000
